@@ -1,5 +1,6 @@
-"""Manifest-committed MERGE table — the transactional swap point the
-parquet upsert sinks stand in for (SURVEY.md A8; VERDICT r1 #8).
+"""Manifest-committed MERGE table — the package's one table-commit
+protocol: the ClickHouse catalog's tables and the streaming upsert
+pipelines write through it (SURVEY.md A8).
 
 The reference's ClickHouse target is a ReplacingMergeTree
 (`/root/reference/README.md:176-177`): writers append, the engine

@@ -7,14 +7,17 @@ Source options:
 
 The transform chain is the *batch* operators unchanged (unwrap →
 mv_users) — batch-first design means streaming reuses them verbatim.
-The sink is ``foreachBatch`` → idempotent parquet upsert with per-batch
-redelivery dedup (A19) applied against the batch, and the ``latest``
-view (A20) computed at read time.
+The sink is the ``foreachBatch`` body the caller passes — a
+``sinks.manifest.ManifestTable`` MERGE (``merge_upsert``) or part ingest
+(``append_parts``), the package's one table-commit protocol — with
+per-batch redelivery dedup (A19) applied against the batch, and the
+``latest`` view (A20) computed at read time (``ManifestTable.read_latest``).
 
 Exactly-once posture: checkpointing + deterministic batch dedup +
-last-wins merge on rewrite. At 100 TB the sink becomes a MERGE-capable
-table format partitioned by entity-key bucket and date; the
-`foreachBatch` body is the only piece that changes.
+last-wins merge + an atomic manifest commit. A micro-batch that fails
+before its commit leaves the previous snapshot current; the checkpoint
+replays it on restart and the orphaned files are reclaimed by
+``ManifestTable.vacuum``.
 """
 
 from __future__ import annotations
@@ -24,10 +27,10 @@ import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from postgre_to_clickhouse_spark.cdc import dedup_redelivery, latest, mv_users, unwrap
+from postgre_to_clickhouse_spark.cdc import mv_users, unwrap
 from postgre_to_clickhouse_spark.cdc.schemas import KAFKA_CDC_RECORD
+from postgre_to_clickhouse_spark.sinks.manifest import ManifestTable
 
 
 def read_json_event_stream(
@@ -63,136 +66,12 @@ def write_events_as_json(events: DataFrame, path: str, n_files: int = 1) -> None
                 f.write(json.dumps(r) + "\n")
 
 
-def _recover_swap(table_path: str) -> None:
-    """Heal a crash that happened mid-swap: if the table dir is missing
-    but the renamed-away previous version exists, restore it. Leftover
-    ``.tmp`` writes are discarded (the micro-batch that produced them
-    will be replayed from the checkpoint)."""
-    import shutil
-
-    old = table_path + ".old"
-    if not os.path.exists(table_path) and os.path.exists(old):
-        os.rename(old, table_path)
-    elif os.path.exists(old):
-        shutil.rmtree(old)
-    tmp = table_path + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-
-
-def upsert_batch(table_path: str, sort_key=("user_id", "updated_at"), arrival=("kafka_offset",)):
-    """foreachBatch body: idempotent upsert into a parquet table
-    (whole-table rewrite — test helper / tiny tables; production path is
-    :func:`upsert_batch_bucketed`, which rewrites only touched buckets).
-
-    Merge strategy (local parquet stand-in for a MERGE-capable format):
-    union the existing table with the deduped batch, re-dedup on the
-    sort key keeping the LOWEST arrival (first-delivered wins —
-    ``dedup_redelivery`` orders ascending; versions are distinguished by
-    ``updated_at`` in the sort key, so redelivered copies of the same
-    version are the only conflicts and idempotency holds). Deterministic
-    ⇒ replaying a batch after a crash converges to the same table.
-
-    Crash safety: write-new → rename-old-away → rename-new-in →
-    delete-old. At every instant either ``table_path`` or
-    ``table_path + ".old"`` holds a complete previous version;
-    :func:`_recover_swap` (run at the start of every batch) restores it.
-    """
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_swap(table_path)
-        batch = dedup_redelivery(batch_df, sort_key, arrival)
-        if os.path.exists(table_path):
-            # any read error here is real (corrupt footer, FS hiccup) —
-            # re-raise so the micro-batch fails and is retried, instead of
-            # silently replacing the table with just this batch
-            existing = spark.read.parquet(table_path)
-            merged = existing.unionByName(batch)
-        else:  # first batch — table doesn't exist yet
-            merged = batch
-        # same (sort_key, arrival) appearing twice (redelivered batch) → one copy
-        merged = dedup_redelivery(merged, sort_key, arrival)
-        merged.persist()
-        merged.count()  # materialize before overwriting the input path
-        merged.write.mode("overwrite").parquet(table_path + ".tmp")
-        merged.unpersist()
-        import shutil
-
-        if os.path.exists(table_path):
-            os.rename(table_path, table_path + ".old")
-        os.rename(table_path + ".tmp", table_path)
-        if os.path.exists(table_path + ".old"):
-            shutil.rmtree(table_path + ".old")
-
-    return _apply
-
-
-def upsert_batch_bucketed(
-    table_path: str,
-    sort_key=("user_id", "updated_at"),
-    arrival=("kafka_offset",),
-    key_col: str = "user_id",
-    n_buckets: int = 16,
-):
-    """foreachBatch body: partition-pruned last-wins upsert.
-
-    The table is laid out as parquet partitioned by
-    ``__bucket = pmod(xxhash64(key), n_buckets)``. Each micro-batch:
-
-    1. dedups the batch (A19) and computes the bucket of every key;
-    2. reads ONLY the touched buckets of the existing table (the
-       ``isin`` filter prunes at the partition-directory level — the
-       scan never opens untouched buckets);
-    3. merges last-wins and rewrites JUST those buckets via dynamic
-       partition overwrite.
-
-    A micro-batch touching 1% of the key space rewrites ~1% of the
-    table instead of 100% — this is the parquet stand-in for a
-    MERGE-capable format at 100 TB (``upsert_batch`` above is the
-    whole-table rewrite it replaces). Idempotency story is identical:
-    deterministic dedup ⇒ replaying a batch converges, and a crash
-    mid-commit is healed by the replay for the same reason.
-    """
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        batch = dedup_redelivery(batch_df, sort_key, arrival).withColumn(
-            "__bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
-        )
-        # bounded by n_buckets (a layout constant), never by batch size
-        touched = [r["__bucket"] for r in batch.select("__bucket").distinct().collect()]
-        if os.path.exists(table_path):
-            # re-raise real read errors (see upsert_batch) — only a missing
-            # table means "first batch"
-            existing = spark.read.parquet(table_path).filter(F.col("__bucket").isin(touched))
-            merged = existing.unionByName(batch)
-        else:  # first batch — table doesn't exist yet
-            merged = batch
-        merged = dedup_redelivery(merged, sort_key, arrival)
-        # sever lineage from the files about to be overwritten (eager)
-        merged = merged.localCheckpoint()
-        merged.write.mode("overwrite").partitionBy("__bucket").parquet(table_path)
-
-    return _apply
-
-
-def run_pipeline(
-    spark: SparkSession,
-    source_path: str,
-    table_path: str,
-    checkpoint_path: str,
-    available_now: bool = True,
-    batch_hook: Callable[[DataFrame, int], None] | None = None,
-):
-    """End-to-end: file stream → unwrap → MV transform → upsert sink.
+def _start(stream: DataFrame, sink, checkpoint_path: str, available_now: bool):
+    """Run ``sink`` as the foreachBatch body of ``stream``.
 
     ``available_now=True`` drains the source and stops (test mode /
     backfill); otherwise runs continuous micro-batches (A24).
     """
-    stream = transform(read_json_event_stream(spark, source_path))
-    sink = batch_hook or upsert_batch_bucketed(table_path)
     writer = stream.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint_path)
     if available_now:
         q = writer.trigger(availableNow=True).start()
@@ -201,21 +80,20 @@ def run_pipeline(
     return writer.trigger(processingTime="5 seconds").start()
 
 
-def read_latest(spark: SparkSession, table_path: str) -> DataFrame:
-    """The FINAL/latest-state view over the ingested table (A20).
-    Transparent to the physical layout: the bucketed sink's ``__bucket``
-    partition column is an implementation detail and is dropped."""
-    df = spark.read.parquet(table_path)
-    if "__bucket" in df.columns:
-        df = df.drop("__bucket")
-    return latest(df)
+def run_pipeline(
+    spark: SparkSession,
+    source_path: str,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint_path: str,
+    available_now: bool = True,
+):
+    """End-to-end: file stream → unwrap → MV transform → ``sink``.
 
-
-def read_all_versions(spark: SparkSession, table_path: str) -> DataFrame:
-    """All version rows (the reference's plain SELECT *, A21)."""
-    return spark.read.parquet(table_path).select(
-        "user_id", "username", "account_type", "updated_at", "created_at", "kafka_time", "kafka_offset"
-    )
+    ``sink`` is the foreachBatch body, normally
+    ``ManifestTable(path).merge_upsert()`` or ``.append_parts()``.
+    """
+    stream = transform(read_json_event_stream(spark, source_path))
+    return _start(stream, sink, checkpoint_path, available_now)
 
 
 def run_pipeline_avro_frames(
@@ -231,20 +109,18 @@ def run_pipeline_avro_frames(
     framed Avro values (``value binary`` — exactly what the Kafka source
     yields) decodes per record under its writer schema, resolves to one
     reader schema (``cdc.avro_py.decode_confluent_avro_arrow_evolving``),
-    and upserts through the same bucketed last-wins sink as the JSON
-    pipeline. One streaming query keeps ingesting across a CDC schema
-    migration mid-topic — the registry-compatibility behavior the
-    reference delegates to Confluent SR + AvroConfluent
-    (``/root/reference/README.md:189-202,260``).
+    and merges into the ``ManifestTable`` at ``table_path``
+    (last-wins on ``updated_at``, redeliveries resolved by
+    ``created_at``). One streaming query keeps ingesting across a CDC
+    schema migration mid-topic — the registry-compatibility behavior
+    the reference delegates to Confluent SR + AvroConfluent.
     """
     from postgre_to_clickhouse_spark.cdc.avro_py import (
         decode_confluent_avro_arrow_evolving,
     )
 
     stream = spark.readStream.schema("value binary").format("parquet").load(frames_path)
-    upsert = upsert_batch_bucketed(
-        table_path, sort_key=("user_id", "updated_at"), arrival=("created_at",)
-    )
+    upsert = ManifestTable(table_path).merge_upsert(arrival=("created_at",))
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         decoded = decode_confluent_avro_arrow_evolving(
@@ -252,11 +128,4 @@ def run_pipeline_avro_frames(
         )
         upsert(decoded, batch_id)
 
-    writer = stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime="5 seconds").start()
+    return _start(stream, _apply, checkpoint_path, available_now)

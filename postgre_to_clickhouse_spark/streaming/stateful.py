@@ -164,8 +164,8 @@ def dedup_stream_ttl(
 
     Emits the min-``arrival_col`` row the first time a key appears;
     a redelivery after TTL expiry re-emits (bounded-state tradeoff,
-    identical to the watermark variant's) — downstream ``upsert_batch``
-    idempotency absorbs it.
+    identical to the watermark variant's) — the downstream
+    ``ManifestTable.merge_upsert`` last-wins merge absorbs it.
     """
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,

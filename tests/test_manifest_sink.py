@@ -120,22 +120,76 @@ def test_time_travel_reads_retained_versions(spark, tmp_path):
 
 
 def test_streaming_pipeline_through_manifest_sink(spark, tmp_path):
-    """run_pipeline with the manifest MERGE as the foreachBatch body:
-    checkpoint restart must not change the committed content."""
+    """run_pipeline with the manifest MERGE as the foreachBatch body
+    matches the batch golden; checkpoint restart must not change the
+    committed content, and a full redelivery converges to it."""
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     t = ManifestTable(str(tmp_path / "t"))
     P.write_events_as_json(users_cdc_events(spark), src, n_files=3)
-    P.run_pipeline(spark, src, str(tmp_path / "unused"), ckpt, batch_hook=t.merge_upsert())
+    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)
     assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
     n1, v1 = t.read(spark).count(), t.current_version()
+    assert n1 == 6  # all-versions view: GOLDEN_ALL_VERSIONS cardinality
     # restart on the same checkpoint: no new data → no new commits
-    P.run_pipeline(spark, src, str(tmp_path / "unused"), ckpt, batch_hook=t.merge_upsert())
+    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)
     assert (t.read(spark).count(), t.current_version()) == (n1, v1)
     # fresh checkpoint: full redelivery → same content, higher version
-    P.run_pipeline(spark, src, str(tmp_path / "unused"), ckpt + "2", batch_hook=t.merge_upsert())
+    P.run_pipeline(spark, src, t.merge_upsert(), ckpt + "2")
     assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
     assert t.read(spark).count() == n1
+
+
+def test_streaming_crash_before_commit_replays_from_checkpoint(spark, tmp_path, monkeypatch):
+    """A micro-batch that dies after writing its files but before its
+    manifest commit fails the query and leaves the table at the last
+    committed version; restarting on the same checkpoint replays that
+    batch, converges to the golden state, and vacuum reclaims the
+    crashed attempt's orphaned files."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    stage, src = tmp_path / "stage", tmp_path / "src"
+    ckpt = str(tmp_path / "ckpt")
+    t = ManifestTable(str(tmp_path / "t"))
+    P.write_events_as_json(users_cdc_events(spark), str(stage), n_files=3)
+    src.mkdir()
+
+    def deliver(i):  # an availableNow run drains every file present as ONE batch
+        name = f"batch_{i:05d}.json"
+        os.rename(stage / name, src / name)
+
+    commit, calls = t._commit, []
+
+    def crash_on_second_batch(files, note):
+        calls.append(note)
+        if len(calls) == 2:
+            raise RuntimeError("crash before commit")
+        return commit(files, note)
+
+    monkeypatch.setattr(t, "_commit", crash_on_second_batch)
+    deliver(0)
+    P.run_pipeline(spark, str(src), t.merge_upsert(), ckpt)
+    deliver(1)
+    with pytest.raises(StreamingQueryException, match="crash before commit"):
+        P.run_pipeline(spark, str(src), t.merge_upsert(), ckpt)
+    assert t.current_version() == 0
+    committed = {f["name"] for f in t.current_manifest()["files"]}
+    orphans = set(os.listdir(tmp_path / "t" / "data")) - committed
+    assert orphans  # the crashed batch wrote files it never committed
+    v0_rows = t.read(spark).count()
+
+    deliver(2)
+    P.run_pipeline(spark, str(src), t.merge_upsert(), ckpt)  # same checkpoint
+    assert len(calls) == 4  # the failed batch replayed, then the new one
+    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
+    assert t.read(spark).count() == 6 > v0_rows
+    assert t.current_version() == 2
+
+    removed = set(t.vacuum(keep_versions=1))
+    assert orphans <= removed
+    live = {f["name"] for f in t.current_manifest()["files"]}
+    assert set(os.listdir(tmp_path / "t" / "data")) == live
 
 
 # -- compaction + TTL (r5: ClickHouse background-merge / TTL parity) -------

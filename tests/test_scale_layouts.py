@@ -1,6 +1,5 @@
 """Scale-layout proofs: bucketed co-located joins eliminate the shuffle,
-salted aggregation matches direct aggregation, compaction reduces file
-count without changing data."""
+salted aggregation matches direct aggregation."""
 
 from __future__ import annotations
 
@@ -9,7 +8,7 @@ from pyspark.sql import functions as F
 
 from postgre_to_clickhouse_spark import catalog
 from postgre_to_clickhouse_spark.operators.skew import salted_agg
-from postgre_to_clickhouse_spark.sinks.maintenance import compact, write_bucketed
+from postgre_to_clickhouse_spark.sinks.maintenance import write_bucketed
 from tests.conftest import SF_SMALL
 
 
@@ -64,20 +63,6 @@ def test_salted_agg_rejects_non_algebraic(spark):
     ev = catalog.load(spark, SF_SMALL, "events")
     with pytest.raises(ValueError, match="salted_agg supports"):
         salted_agg(ev, keys=("user_id",), aggs={"a": ("value", "avg")})
-
-
-def test_compaction_preserves_data(spark, tmp_path):
-    path = str(tmp_path / "frag")
-    ev = catalog.load(spark, SF_SMALL, "events")
-    ev.repartition(37).write.parquet(path)  # fragment: 37 small files
-    before = sorted(map(tuple, spark.read.parquet(path).collect()))
-    n_files = compact(spark, path, target_file_bytes=64 * 1024 * 1024)
-    import os
-
-    files = [f for _, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")]
-    assert len(files) == n_files < 37
-    after = sorted(map(tuple, spark.read.parquet(path).collect()))
-    assert after == before
 
 
 def test_salted_join_equals_plain_join(spark):

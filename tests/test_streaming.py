@@ -5,17 +5,12 @@ watermarked windowed aggregation mode (B18)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from postgre_to_clickhouse_spark.cdc import mv_users, unwrap
 from postgre_to_clickhouse_spark.cdc.fixtures import GOLDEN_LATEST, users_cdc_events
+from postgre_to_clickhouse_spark.sinks.manifest import ManifestTable
 from postgre_to_clickhouse_spark.streaming import pipeline as P
-
-
-@pytest.fixture()
-def stream_dirs(tmp_path):
-    return str(tmp_path / "src"), str(tmp_path / "tbl"), str(tmp_path / "ckpt")
 
 
 def _latest_map(df):
@@ -25,52 +20,51 @@ def _latest_map(df):
     }
 
 
-def test_streaming_pipeline_matches_batch_golden(spark, stream_dirs):
-    src, tbl, ckpt = stream_dirs
-    events = users_cdc_events(spark)
-    P.write_events_as_json(events, src, n_files=3)  # 3 micro-batches
-    P.run_pipeline(spark, src, tbl, ckpt)
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
+def test_streaming_pipeline_matches_batch_golden(spark, tmp_path):
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    t = ManifestTable(str(tmp_path / "tbl"))
+    P.write_events_as_json(users_cdc_events(spark), src, n_files=3)  # 3 micro-batches
+    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)
+    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
     # all-versions view matches the batch pipeline applied directly
-    batch = P.read_all_versions(spark, tbl)
-    assert batch.count() == 6  # GOLDEN_ALL_VERSIONS cardinality
+    assert t.read(spark).count() == 6  # GOLDEN_ALL_VERSIONS cardinality
 
 
-def test_streaming_restart_is_idempotent(spark, stream_dirs):
-    src, tbl, ckpt = stream_dirs
+def test_streaming_restart_is_idempotent(spark, tmp_path):
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    t = ManifestTable(str(tmp_path / "tbl"))
     P.write_events_as_json(users_cdc_events(spark), src, n_files=2)
-    P.run_pipeline(spark, src, tbl, ckpt)
-    n1 = P.read_all_versions(spark, tbl).count()
-    P.run_pipeline(spark, src, tbl, ckpt)  # same checkpoint: no new data
-    n2 = P.read_all_versions(spark, tbl).count()
+    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)
+    n1, v1 = t.read(spark).count(), t.current_version()
+    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)  # same checkpoint: no new data
+    n2, v2 = t.read(spark).count(), t.current_version()
     assert n1 == n2 == 6
+    assert v1 == v2  # no micro-batch ran, so nothing was committed
 
 
-def test_streaming_redelivered_batch_is_idempotent(spark, stream_dirs):
+def test_streaming_redelivered_batch_is_idempotent(spark, tmp_path):
     """Replaying the same source into a FRESH checkpoint (simulating
     at-least-once redelivery of every batch) must converge to the same
     table — the upsert merge is deterministic."""
-    src, tbl, ckpt = stream_dirs
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    t = ManifestTable(str(tmp_path / "tbl"))
     P.write_events_as_json(users_cdc_events(spark), src, n_files=1)
-    P.run_pipeline(spark, src, tbl, ckpt)
-    P.run_pipeline(spark, src, tbl, ckpt + "_2")  # fresh checkpoint → full replay
-    assert P.read_all_versions(spark, tbl).count() == 6
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
+    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)
+    P.run_pipeline(spark, src, t.merge_upsert(), ckpt + "_2")  # fresh checkpoint → full replay
+    assert t.read(spark).count() == 6
+    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
 
 
-def test_streaming_transform_equals_batch_transform(spark, stream_dirs):
+def test_streaming_transform_equals_batch_transform(spark, tmp_path):
     """A27 unification: identical operator chain under read vs readStream."""
-    src, tbl, ckpt = stream_dirs
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
     events = users_cdc_events(spark)
     P.write_events_as_json(events, src, n_files=2)
 
     batch_out = mv_users(unwrap(events)).orderBy("kafka_offset").collect()
 
     collected = []
-    P.run_pipeline(
-        spark, src, tbl, ckpt,
-        batch_hook=lambda df, bid: collected.extend(df.collect()),
-    )
+    P.run_pipeline(spark, src, lambda df, bid: collected.extend(df.collect()), ckpt)
     stream_out = sorted(collected, key=lambda r: r.kafka_offset)
     assert [tuple(r) for r in stream_out] == [tuple(r) for r in batch_out]
 
@@ -111,87 +105,6 @@ def test_watermarked_window_agg_stream(spark, tmp_path):
     assert got == batch
 
 
-def test_upsert_crash_window_recovery(spark, tmp_path):
-    """Kill-between-write-and-swap simulation: at every instant of the
-    swap protocol either the table dir or its ``.old`` sibling holds a
-    complete previous version, and replaying the batch after any of the
-    three possible crash points converges back to the golden state."""
-    import os
-    import shutil
-
-    tbl = str(tmp_path / "tbl")
-    full = mv_users(unwrap(users_cdc_events(spark)))
-    sink = P.upsert_batch(tbl)
-    sink(full, 0)
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
-
-    # crash point 1: tmp written, swap not started
-    shutil.copytree(tbl, tbl + ".tmp")
-    sink(full, 1)
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
-    assert not os.path.exists(tbl + ".tmp") and not os.path.exists(tbl + ".old")
-
-    # crash point 2: old renamed away, new not yet renamed in (table MISSING)
-    shutil.copytree(tbl, tbl + ".tmp")
-    os.rename(tbl, tbl + ".old")
-    sink(full, 2)
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
-    assert not os.path.exists(tbl + ".tmp") and not os.path.exists(tbl + ".old")
-
-    # crash point 3: new renamed in, old not yet deleted
-    shutil.copytree(tbl, tbl + ".old")
-    sink(full, 3)
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
-    assert not os.path.exists(tbl + ".old")
-
-
-def _bucket_snapshot(tbl):
-    """(relative file path → (size, mtime_ns)) per bucket directory."""
-    import os
-
-    snap = {}
-    for dirpath, _, files in os.walk(tbl):
-        for fn in files:
-            if fn.startswith(("_", ".")):
-                continue
-            full = os.path.join(dirpath, fn)
-            rel = os.path.relpath(full, tbl)
-            st = os.stat(full)
-            snap[rel] = (st.st_size, st.st_mtime_ns)
-    return snap
-
-
-def test_bucketed_upsert_matches_golden_and_prunes_rewrites(spark, tmp_path):
-    """The partition-pruned sink must (a) converge to the same latest
-    state as the whole-table-rewrite sink, (b) be idempotent under batch
-    redelivery, and (c) leave untouched bucket partitions byte-identical
-    — the property that makes it viable at 100 TB."""
-    tbl = str(tmp_path / "tbl_bucketed")
-    full = mv_users(unwrap(users_cdc_events(spark)))
-    sink = P.upsert_batch_bucketed(tbl)
-
-    sink(full, 0)
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
-    n1 = P.read_all_versions(spark, tbl).count()
-    sink(full, 1)  # full redelivery of every row → no change
-    assert P.read_all_versions(spark, tbl).count() == n1
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
-
-    # single-key update batch: only that key's bucket may be rewritten
-    one = full.orderBy(F.col("kafka_offset").desc()).limit(1)
-    key = one.collect()[0].user_id
-    before = _bucket_snapshot(tbl)
-    sink(one, 2)
-    after = _bucket_snapshot(tbl)
-
-    touched_bucket = f"__bucket={[r['__bucket'] for r in spark.read.parquet(tbl).filter(F.col('user_id') == key).select('__bucket').distinct().collect()][0]}"
-    untouched_before = {p: v for p, v in before.items() if not p.startswith(touched_bucket)}
-    untouched_after = {p: v for p, v in after.items() if not p.startswith(touched_bucket)}
-    assert untouched_before, "fixture keys all hashed to one bucket — raise n_buckets"
-    assert untouched_before == untouched_after  # byte-identical: never rewritten
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
-
-
 # -- Avro-framed streaming with schema evolution (round 4) ------------------
 def test_streaming_avro_frames_schema_evolution(spark, tmp_path):
     """Two micro-batch files: v1-schema records then v2 (adds nullable
@@ -201,7 +114,6 @@ def test_streaming_avro_frames_schema_evolution(spark, tmp_path):
     from postgre_to_clickhouse_spark.cdc import avro as A
     from postgre_to_clickhouse_spark.cdc import avro_py as AP
     from postgre_to_clickhouse_spark.cdc.schemas import USERS_AVRO_SCHEMA
-    from postgre_to_clickhouse_spark.streaming.pipeline import run_pipeline_avro_frames
     from tests.test_avro_framing import USERS_V2_AVRO_SCHEMA
 
     frames_dir = str(tmp_path / "frames")
@@ -225,20 +137,17 @@ def test_streaming_avro_frames_schema_evolution(spark, tmp_path):
     spark.createDataFrame(f2, "value binary").coalesce(1).write.mode("append").parquet(frames_dir)
 
     schemas = {1: USERS_AVRO_SCHEMA, 2: USERS_V2_AVRO_SCHEMA}
-    run_pipeline_avro_frames(spark, frames_dir, table, ckpt, schemas, USERS_V2_AVRO_SCHEMA)
+    P.run_pipeline_avro_frames(spark, frames_dir, table, ckpt, schemas, USERS_V2_AVRO_SCHEMA)
 
-    from postgre_to_clickhouse_spark.cdc.dedup import latest
-
-    final = latest(
-        spark.read.parquet(table), entity_key=("user_id",), version_cols=("updated_at",)
-    )
+    t = ManifestTable(table)
+    final = t.read_latest(spark, version_cols=("updated_at",))
     got = {r.user_id: (r.username, r.email) for r in final.collect()}
     assert got == {1: ("ann2", "ann@example.org"), 2: ("bob", None), 3: ("cat", None)}
 
-    n_before = spark.read.parquet(table).count()
-    # restart with the SAME checkpoint: source fully drained -> no-op
-    run_pipeline_avro_frames(spark, frames_dir, table, ckpt, schemas, USERS_V2_AVRO_SCHEMA)
-    assert spark.read.parquet(table).count() == n_before
+    v_before, n_before = t.current_version(), t.read(spark).count()
+    # restart with the SAME checkpoint: source fully drained -> no commit
+    P.run_pipeline_avro_frames(spark, frames_dir, table, ckpt, schemas, USERS_V2_AVRO_SCHEMA)
+    assert (t.current_version(), t.read(spark).count()) == (v_before, n_before)
 
 
 def test_stream_stream_interval_join(spark, tmp_path):
